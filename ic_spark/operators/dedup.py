@@ -62,7 +62,7 @@ def _spread(df: DataFrame) -> DataFrame:
     would be pure cost).
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    pk = _plan_key(df)
+    pk = plan_key(df)
     key = None
     if pk is not None:
         key = (id(df.sparkSession), pk, target)
@@ -96,10 +96,14 @@ _PROBE_MEMO: dict = {}
 _PROBE_MEMO_MAX = 256
 
 
-def _plan_key(df: DataFrame):
+def plan_key(df: DataFrame) -> int | None:
     """Semantic hash of a DataFrame's analyzed plan — stable across
     identical rebuilds of the same query, distinct across different
-    sources/filters.  None (no memoization) if the JVM call fails."""
+    sources/filters.  None (no memoization) if the JVM call fails.
+
+    Public so callers that checkpoint a frame can key the operator
+    memos on the plan from before the checkpoint (see
+    :func:`minhash_lsh_candidates`' ``probe_memo_key``)."""
     try:
         return df._jdf.queryExecution().analyzed().semanticHash()
     except Exception:
@@ -391,7 +395,7 @@ def token_jaccard_pairs(
         # hot corpus a stale foreign probe.
         memo_key=(
             None
-            if (_pk := _plan_key(df)) is None
+            if (_pk := plan_key(df)) is None
             else ("jaccard", _pk, tuple(block_cols), subblock_target, detect_sample,
                max_hot_collect)
         ),
@@ -1241,19 +1245,19 @@ def minhash_lsh_candidates(
     detect_sample: float = 0.05,
     max_hot_collect: int = 4096,
     big_side: bool = False,
-    probe_memo_key=None,
+    probe_memo_key: int | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding → (id_a, id_b).
 
-    ``probe_memo_key`` (r13): stable identity for the hot-key probe
-    memo.  The default key is the semanticHash of ``signatures`` —
-    which is USELESS when the caller checkpoints the signature frame
-    first, because every checkpoint wraps a fresh RDD and hashes
-    differently, so repeat invocations re-ran the probe job every time
-    (measured: one sample+aggregate+collect per bench rep).  Callers
-    that checkpoint should pass the plan key of the UNCHECKPOINTED
-    pipeline (see dedup_minhash_lsh); the memo stays advisory-only
-    (a stale entry can only pick a different result-identical plan).
+    ``probe_memo_key``: stable identity for the hot-key probe memo.
+    When given, it must be :func:`plan_key` of the signature frame
+    from BEFORE the caller's checkpoint.  The default key is
+    ``plan_key(signatures)`` — which is useless when ``signatures`` is
+    a checkpoint, because every checkpoint wraps a fresh RDD and
+    hashes differently, so repeat invocations re-ran the probe job
+    every time (measured: one sample+aggregate+collect per bench rep).
+    See dedup_minhash_lsh; the memo stays advisory-only (a stale entry
+    can only pick a different result-identical plan).
 
     Explode each signature into ``bands`` (band_idx, band_hash) keys;
     pairs agreeing on ANY band meet in an equi-join on the band key.
@@ -1335,7 +1339,7 @@ def minhash_lsh_candidates(
             None
             if (_pk := (probe_memo_key
                         if probe_memo_key is not None
-                        else _plan_key(signatures))) is None
+                        else plan_key(signatures))) is None
             else ("lsh", _pk, bands, rows_per_band, portable, bucket_target,
                detect_sample, max_hot_collect)
         ),

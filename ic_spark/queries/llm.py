@@ -19,6 +19,7 @@ from ic_spark.operators.dedup import (
     minhash_lsh_candidates,
     minhash_perms,
     minhash_signatures,
+    plan_key,
     simhash,
     substring_dup_spans,
     token_jaccard_pairs,
@@ -54,62 +55,63 @@ _JACCARD_THRESHOLD = 0.8
 
 
 def _verify_pairs_single_pass(cands, sh, threshold: float = 0.5):
-    """Exact-Jaccard verification of LSH candidate pairs in ONE pass
-    over the shingle frame (r13, VERDICT r12 #2).
+    """Exact-Jaccard verification of LSH candidate pairs: the pair list
+    streams in parallel past the shingle frame, with one
+    ``array_intersect`` per pair.
 
-    The r12 shape joined a CHECKPOINTED shingle frame twice (as sh_a
-    and sh_b) — the checkpoint existed only because two joins consumed
-    the frame, and without a barrier each join re-ran the corpus scan +
-    semi-join + shingle pass.  Fused shape: explode each candidate pair
-    into its two member ids, join the (un-materialized) shingle frame
-    ONCE, and regroup by pair — the heavy shingle arrays cross exactly
-    one exchange (the pair groupBy) and the third checkpoint
-    materialization disappears.  Candidate pairs are distinct with
-    id_a < id_b, so each group holds exactly its two member rows and
-    ``first(..., ignorenulls)`` is deterministic (one non-null per
-    side).  Results are row-identical to the two-join shape (pinned by
-    the portable oracle + the production/portable equality test).
+    - The thin ``(id_a, id_b)`` list is round-robined to the session's
+      default parallelism.  A checkpointed candidate list is small
+      (16 bytes a pair) and would sit in one partition, so the whole
+      verify would run as one task; a shuffle with an explicit
+      partition count is never coalesced by AQE.
+    - ``sh_a`` and ``sh_b`` attach through two LEFT joins to the same
+      shingle frame.  A left join can broadcast only its right side,
+      so AQE broadcasts the shingle table while it is small and keeps
+      a shuffled join at scale (an inner join would let AQE broadcast
+      the pair list instead and stream the shingle scan through one
+      task).  The two broadcasts are one exchange, built once and
+      reused; in the shuffled plan the joins reuse the upstream scan
+      and semi-join shuffles and run the shingle pass once each.
+    - The intersect is evaluated inside a one-row ``inline``.  The
+      filter on the generated columns cannot be pushed below the
+      Generate, so Catalyst neither copies the intersect into both the
+      Filter and the Project nor rewrites the left joins as inner
+      joins.
+
+    A pair whose member id has no shingle row carries a null array and
+    gets a null intersect, so it drops exactly as an inner join drops
+    it.  The length bound (J >= t needs min >= t*max shingles)
+    guards the intersect: two int compares ahead of it, result-
+    identical.  The Jaccard filter uses the raw ratio like the oracle;
+    the output is rounded for display.
 
     ``sh`` must be (doc_id, sh) with one row per candidate doc;
     ``cands`` is consumed twice (member-id semi-join upstream + the
-    pair explode here) and should be checkpointed by the caller.
+    pair stream here) and should be checkpointed by the caller.
     """
-    pe = cands.select(
-        "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("doc_id")
-    )
+    n = cands.sparkSession.sparkContext.defaultParallelism
     pairs = (
-        sh.join(pe, on="doc_id")
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.first(
-                F.when(F.col("doc_id") == F.col("id_a"), F.col("sh")),
-                ignorenulls=True,
-            ).alias("sh_a"),
-            F.first(
-                F.when(F.col("doc_id") == F.col("id_b"), F.col("sh")),
-                ignorenulls=True,
-            ).alias("sh_b"),
-        )
-        # Length filter (J >= t needs min >= t*max shingles): two int
-        # compares ahead of each intersect — result-identical.
-        .where(
-            F.least(F.size("sh_a"), F.size("sh_b")).cast("double")
-            >= threshold * F.greatest(F.size("sh_a"), F.size("sh_b"))
-        )
+        cands.select("id_a", "id_b")
+        .repartition(n)
+        .join(sh.withColumnsRenamed({"doc_id": "id_a", "sh": "sh_a"}),
+              on="id_a", how="left")
+        .join(sh.withColumnsRenamed({"doc_id": "id_b", "sh": "sh_b"}),
+              on="id_b", how="left")
     )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    raw = inter.cast("double") / union.cast("double")
+    na, nb = F.size("sh_a"), F.size("sh_b")
+    both = F.col("sh_a").isNotNull() & F.col("sh_b").isNotNull()
+    fits = F.least(na, nb).cast("double") >= threshold * F.greatest(na, nb)
+    sizes = F.struct(
+        F.when(both & fits, F.size(F.array_intersect("sh_a", "sh_b"))).alias("inter"),
+        na.alias("na"),
+        nb.alias("nb"),
+    )
+    inter = F.col("inter")
+    raw = inter.cast("double") / (F.col("na") + F.col("nb") - inter).cast("double")
     return (
-        pairs.select(
-            "id_a",
-            "id_b",
-            # filter on the RAW ratio like the oracle; round for display
-            F.round(raw, 6).alias("jaccard"),
-            raw.alias("__raw"),
-        )
-        .where(F.col("__raw") >= threshold)
-        .drop("__raw")
+        pairs.select("id_a", "id_b", F.inline(F.array(sizes)))
+        .where(raw >= threshold)
+        .select("id_a", "id_b", F.round(raw, 6).alias("jaccard"))
     )
 
 
@@ -243,9 +245,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str):
     # Probe-memo key from the UNCHECKPOINTED pipeline (r13): every
     # checkpoint wraps a fresh RDD, so keying on the checkpointed frame
     # made repeat invocations re-run the hot-key probe job every time.
-    from ic_spark.operators.dedup import _plan_key
-
-    sigs_key = _plan_key(raw_sigs)
+    sigs_key = plan_key(raw_sigs)
     sigs = stable_checkpoint(raw_sigs)
     cands = stable_checkpoint(minhash_lsh_candidates(
         sigs, bands=_MINHASH_BANDS, rows_per_band=_MINHASH_R,
@@ -267,10 +267,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str):
     # strings at all.  Jaccard values are identical barring 64-bit
     # collisions inside one pair (~|sh|^2/2^64 — negligible), same
     # trade token_jaccard_pairs documents.
-    # No checkpoint on sh (r13): _verify_pairs_single_pass consumes it
-    # exactly once, so the r12 barrier (which existed because the
-    # sh_a/sh_b joins were two consumers) is gone — two checkpoint
-    # materializations for the whole query instead of three.
+    # No checkpoint on sh: while it broadcasts, the verify's sh_a and
+    # sh_b joins share one exchange, so the query materializes two
+    # checkpoints, not three (see _verify_pairs_single_pass for the
+    # shuffled plan).
     sh = (
         d.join(cand_ids, on="doc_id", how="left_semi")
         .select(
@@ -281,10 +281,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str):
             ).alias("sh"),
         )
     )
-    # No broadcast hints inside: the candidate set (and its shingle
-    # arrays) scales with near-dup density x corpus size — a hard
-    # hint OOMs the driver on dup-heavy corpora. AQE broadcasts at
-    # runtime while the sides are actually small.
+    # No broadcast hints: the candidate set (and its shingle arrays)
+    # scales with near-dup density x corpus size — a hard hint OOMs
+    # the driver on dup-heavy corpora.  The verify's LEFT joins can
+    # build only the shingle side, which AQE broadcasts while it is
+    # small and shuffles at scale.
     return _verify_pairs_single_pass(cands, sh, threshold=0.5)
 
 
@@ -489,9 +490,7 @@ def dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str):
         portable=True,
     )
     # stable probe-memo key: see dedup_minhash_lsh (r13)
-    from ic_spark.operators.dedup import _plan_key
-
-    sigs_key = _plan_key(raw_sigs)
+    sigs_key = plan_key(raw_sigs)
     sigs = stable_checkpoint(raw_sigs)
     cands = stable_checkpoint(minhash_lsh_candidates(
         sigs, bands=_MINHASH_BANDS, rows_per_band=_MINHASH_R, portable=True,
@@ -501,10 +500,10 @@ def dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str):
     from ic_spark.functions.text import word_shingles
 
     cand_ids = cands.select(F.explode(F.array("id_a", "id_b")).alias("doc_id")).distinct()
-    # No checkpoint on sh (r13): single consumer via the fused verify —
-    # same reasoning as the production twin.  The length filter inside
-    # the fused verify is result-identical here too (J >= t implies
-    # min >= t*max since J <= min/max).
+    # No checkpoint and no broadcast hint on sh: same reasoning as the
+    # production twin.  The length bound inside the verify is
+    # result-identical here too (J >= t implies min >= t*max since
+    # J <= min/max).
     sh = (
         d.join(cand_ids, on="doc_id", how="left_semi")
         .select(

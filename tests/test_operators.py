@@ -370,43 +370,91 @@ def test_minhash_token_hash_kernel_edge_rows(spark):
     assert sorted(ea) == [3, 5, 6, 7, 9]
 
 
-def test_verify_pairs_single_pass_equals_two_join(spark):
-    """The r13 fused verify (explode pair -> one shingle join -> regroup)
-    must emit exactly what the r12 two-join shape emitted: same pairs,
-    same jaccard values — including a no-shingle-overlap pair (dropped
-    by the threshold) and a length-filtered pair."""
-    from ic_spark.queries.llm import _verify_pairs_single_pass
-
-    cands = spark.createDataFrame(
-        [(1, 2), (1, 3), (2, 4)], "id_a long, id_b long"
-    )
-    sh = spark.createDataFrame(
-        [
-            (1, [10, 20, 30, 40]),
-            (2, [10, 20, 30, 50]),
-            (3, [99]),            # length-filtered vs doc 1 (1 < 0.5*4)
-            (4, [70, 80, 90, 95]),  # zero overlap with doc 2
-        ],
-        "doc_id long, sh array<long>",
-    )
-    got = sorted(map(tuple, _verify_pairs_single_pass(cands, sh, 0.5).collect()))
-    # reference: the explicit two-join spelling
+def _verify_two_join_reference(cands, sh, threshold):
+    """The explicit two-INNER-join spelling of exact-Jaccard verify."""
     a = sh.withColumnsRenamed({"doc_id": "id_a", "sh": "sh_a"})
     b = sh.withColumnsRenamed({"doc_id": "id_b", "sh": "sh_b"})
     j = cands.join(a, on="id_a").join(b, on="id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     raw = inter.cast("double") / union.cast("double")
-    want = sorted(
-        map(
-            tuple,
-            j.select("id_a", "id_b", F.round(raw, 6).alias("jaccard"), raw.alias("r"))
-            .where(F.col("r") >= 0.5)
-            .drop("r")
-            .collect(),
-        )
+    return (
+        j.select("id_a", "id_b", F.round(raw, 6).alias("jaccard"), raw.alias("r"))
+        .where(F.col("r") >= threshold)
+        .drop("r")
     )
-    assert got == want == [(1, 2, 0.6)]
+
+
+def test_verify_pairs_single_pass_equals_two_join(spark):
+    """The verify (round-robin pair stream -> two LEFT joins to the
+    shingle frame -> one intersect per pair) must emit exactly what
+    the two-inner-join shape emits: same pairs, same jaccard values —
+    including a no-shingle-overlap pair (dropped by the threshold), a
+    length-filtered pair, and candidates whose member ids have no
+    shingle row (dropped, as the inner join drops them).  Checked for
+    ``array<bigint>`` shingles and for ``array<string>``, the portable
+    twin's type, and again under the shuffled plan AQE picks at scale
+    (broadcast disabled)."""
+    from ic_spark.queries.llm import _verify_pairs_single_pass
+
+    cands = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 4), (2, 5), (5, 6), (6, 7)], "id_a long, id_b long"
+    )
+    shingles = [
+        (1, [10, 20, 30, 40]),
+        (2, [10, 20, 30, 50]),
+        (3, [99]),            # length-filtered vs doc 1 (1 < 0.5*4)
+        (4, [70, 80, 90, 95]),  # zero overlap with doc 2
+        (7, [10, 20, 30, 50]),  # 5 and 6 have no shingle row
+    ]
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    for elem, conv in (("bigint", int), ("string", str)):
+        sh = spark.createDataFrame(
+            [(d, [conv(x) for x in xs]) for d, xs in shingles],
+            f"doc_id long, sh array<{elem}>",
+        )
+        want = rows(_verify_two_join_reference(cands, sh, 0.5))
+        assert want == [(1, 2, 0.6)]
+        assert rows(_verify_pairs_single_pass(cands, sh, 0.5)) == want
+        spark.conf.set(key, "-1")
+        try:
+            out = _verify_pairs_single_pass(cands, sh, 0.5)
+            assert rows(out) == want
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastHashJoin" not in plan
+        finally:
+            spark.conf.set(key, prev)
+
+
+def test_verify_pairs_plan_shape(spark):
+    """Plan pin for the verify under default settings, on the real
+    pipeline over the fixture corpus: the pair list is round-robined
+    to the default parallelism, ``array_intersect`` is evaluated once
+    per pair, and the shingle table reaches both LEFT joins through
+    one broadcast exchange (built once, then reused) — never through
+    a shuffle."""
+    from ic_spark.queries.llm import dedup_minhash_lsh
+    from tests.conftest import SF_DIR
+
+    out = dedup_minhash_lsh(spark, SF_DIR)
+    assert out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    n = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({n})" in final
+    assert final.count("array_intersect(") == 1
+    joins = [ln for ln in final.splitlines() if "LeftOuter" in ln]
+    assert len(joins) == 2
+    assert all("BroadcastHashJoin" in ln and "BuildRight" in ln for ln in joins)
+    assert any(
+        "ReusedExchange" in ln and "BroadcastExchange" in ln
+        for ln in final.splitlines()
+    )
 
 
 @pytest.mark.slow

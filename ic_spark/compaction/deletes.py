@@ -772,7 +772,14 @@ def merge_upsert(
         raise ValueError("source wrote no data files (empty batch?)")
     # Keys come from a column-pruned scan of the files just written —
     # one cheap columnar pass, not a second execution of the source plan.
-    keys = spark.read.parquet(data_dir).select(*key_cols).distinct()
+    # The files hold exactly the source's schema: enforcing it skips
+    # the schema-inference job.
+    keys = (
+        spark.read.schema(source.schema)
+        .parquet(data_dir)
+        .select(*key_cols)
+        .distinct()
+    )
     eq_path = _write_single_file(
         keys, os.path.join(table.root, f"eq-del-{batch}"), mfs
     )

@@ -223,21 +223,9 @@ def _local_path(path: str) -> str | None:
     return path
 
 
-def validate_file_schemas(
-    paths: list[str],
-    request_schema: StructType,
-    name_mapping: dict[str, list[str]] | None = None,
-) -> None:
-    """Reject non-widening type changes BEFORE the scan runs.
-
-    Reads each local file's Parquet footer (pyarrow, driver-side
-    planning I/O) and checks every request field that resolves to a
-    physical column for spec-legal promotion.  Object-store URIs are
-    skipped (see module docstring).
-    """
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_type
-
+def local_parquet_files(paths: list[str]) -> list[str]:
+    """The local Parquet files behind ``paths`` (directory writes
+    expanded); object-store URIs are skipped (see module docstring)."""
     import os as _os
 
     expanded: list[str] = []
@@ -259,6 +247,23 @@ def validate_file_schemas(
                 )
         else:
             expanded.append(local)
+    return expanded
+
+
+def validate_file_schemas(
+    paths: list[str],
+    request_schema: StructType,
+    name_mapping: dict[str, list[str]] | None = None,
+) -> None:
+    """Reject non-widening type changes BEFORE the scan runs.
+
+    Reads each local file's Parquet footer (pyarrow, driver-side
+    planning I/O) and checks every request field that resolves to a
+    physical column for spec-legal promotion.  Object-store URIs are
+    skipped (see module docstring).
+    """
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
     from pyspark.sql.types import TimestampNTZType, TimestampType
 
     def footer_ambiguous(src: DataType, dst: DataType) -> bool:
@@ -274,7 +279,7 @@ def validate_file_schemas(
         (field, [field.name, *_aliases(name_mapping, field.name)])
         for field in request_schema.fields
     ]
-    for local in expanded:
+    for local in local_parquet_files(paths):
         footer = pq.read_schema(local)
         phys: dict[str, DataType] = {}
         for i, name in enumerate(footer.names):

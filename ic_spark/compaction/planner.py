@@ -424,11 +424,16 @@ def scan_position_delete_rows(
     multi-path read — a single mixed read would resolve by one sampled
     schema and silently NULL the other flavor's columns.  The sniff is
     one pyarrow footer read per DELETE file (delete files are few and
-    maintenance-bounded; Iceberg planning reads these footers too).
+    maintenance-bounded; Iceberg planning reads these footers too), and
+    it also supplies each group's read schema — ``(<name 0> string,
+    <name 1> long)`` — so the scan runs no schema-inference job.  A
+    footer pyarrow cannot read (an object-store URI) falls back to an
+    inferred read of the spec names.
     """
     from collections import defaultdict as _dd
 
     import pyarrow.parquet as _pq
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     import os as _os
 
@@ -446,17 +451,24 @@ def scan_position_delete_rows(
         try:
             return tuple(_pq.read_schema(p).names[:2])
         except Exception:
-            return ("file_path", "pos")
+            return ()
 
     groups: dict[tuple, list[str]] = _dd(list)
     for t in tasks:
         groups[_sniff(t.data_file_path)].append(t.data_file_path)
-    parts = [
-        spark.read.parquet(*paths)
-        .select(*list(names)[:2])
-        .toDF(SYS_HIDDEN_FILE_PATH, SYS_HIDDEN_POS)
-        for names, paths in sorted(groups.items())
-    ]
+    parts = []
+    for names, paths in sorted(groups.items()):
+        if names:
+            schema = StructType(
+                [
+                    StructField(names[0], StringType()),
+                    StructField(names[1], LongType()),
+                ]
+            )
+            df = spark.read.schema(schema).parquet(*paths)
+        else:
+            df = spark.read.parquet(*paths).select("file_path", "pos")
+        parts.append(df.toDF(SYS_HIDDEN_FILE_PATH, SYS_HIDDEN_POS))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -604,23 +616,29 @@ def _scan_path_variants(p: str) -> list[str]:
     return out
 
 
+def _file_map_df(spark: SparkSession, columns: dict[str, str], rows) -> DataFrame:
+    """A driver-built file map (scan path spellings and their per-file
+    values) as a DataFrame of ``columns`` (name -> SQL type).
+
+    The rows ship as ONE Arrow batch that the JVM decodes itself: no
+    pickled Python RDD, so the map's broadcast starts no Python worker
+    and building it runs no Spark job.  Object-typed pandas columns
+    keep ``None`` a null under both the Arrow route and Spark's
+    non-Arrow fallback."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(list(rows), columns=list(columns), dtype=object)
+    schema = ", ".join(f"`{n}` {t}" for n, t in columns.items())
+    return spark.createDataFrame(pdf, schema=schema)
+
+
 def scan_path_variant_df(spark: SparkSession, paths, col_name: str = "path"):
     """One-column DataFrame holding EVERY scan spelling of ``paths`` —
     the broadcast probe side for left-semi liveness checks (delete
     maintenance).  Left-semi tolerates duplicate keys, so a plain set
-    union suffices; above the file-count threshold the list ships as
-    one Arrow batch instead of Py4J-pickled tuples."""
+    union suffices."""
     vals = sorted({v for p in paths for v in _scan_path_variants(p)})
-    if len(vals) > LINEAGE_ARROW_FILE_THRESHOLD:
-        import pandas as pd
-
-        return spark.createDataFrame(
-            pd.DataFrame({col_name: pd.Series(vals, dtype="string")}),
-            schema=f"{col_name} string",
-        )
-    return spark.createDataFrame(
-        [(v,) for v in vals] or [("",)], f"{col_name} string"
-    )
+    return _file_map_df(spark, {col_name: "string"}, ((v,) for v in vals))
 
 
 def _normalize_delete_join_paths(
@@ -655,19 +673,11 @@ def _normalize_delete_join_paths(
                 )
     if not multi:
         return data, pos_del
-    rows = sorted(seen.items())
-    map_schema = "__np_var string, __np_canon string"
-    if len(rows) > LINEAGE_ARROW_FILE_THRESHOLD:
-        import pandas as pd
-
-        map_df = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["__np_var", "__np_canon"]).astype(
-                "string"
-            ),
-            schema=map_schema,
-        )
-    else:
-        map_df = spark.createDataFrame(rows, map_schema)
+    map_df = _file_map_df(
+        spark,
+        {"__np_var": "string", "__np_canon": "string"},
+        sorted(seen.items()),
+    )
 
     def norm(df: DataFrame) -> DataFrame:
         out = df.join(
@@ -714,23 +724,11 @@ def attach_partition_values(
                     f"ambiguous scan path spelling {v!r}: "
                     f"{other!r} vs {p!r}"
                 )
-    map_schema = "__pf_path string, " + ", ".join(
-        f"`__pf_{c}` string" for c in cols
+    map_df = _file_map_df(
+        spark,
+        {"__pf_path": "string", **{f"__pf_{c}": "string" for c in cols}},
+        rows,
     )
-    if len(rows) > LINEAGE_ARROW_FILE_THRESHOLD:
-        # Same Arrow-batch routing as attach_lineage: above the
-        # threshold, Py4J-pickling millions of tuples dominates plan
-        # time; one Arrow batch ships the map instead.
-        import pandas as pd
-
-        map_df = spark.createDataFrame(
-            pd.DataFrame(
-                rows, columns=["__pf_path"] + [f"__pf_{c}" for c in cols]
-            ).astype("string"),
-            schema=map_schema,
-        )
-    else:
-        map_df = spark.createDataFrame(rows, map_schema)
     out = df.join(
         F.broadcast(map_df),
         F.col(SYS_HIDDEN_FILE_PATH) == F.col("__pf_path"),
@@ -742,6 +740,27 @@ def attach_partition_values(
             F.coalesce(F.col(c), F.col(f"__pf_{c}").cast(types[c])),
         )
     return out.drop("__pf_path", *[f"__pf_{c}" for c in cols])
+
+
+def _require_key_columns(tasks: list[FileScanTask], keys: list[str]) -> None:
+    """Equality-delete files must store their key columns (Iceberg spec,
+    "Equality Delete Files").  Read under an enforced schema, a missing
+    key would surface as NULL and silently delete nothing, so the local
+    footers are checked first; a key the task's partition values supply
+    is exempt.  Names match case-insensitively, as Spark resolves them."""
+    import pyarrow.parquet as pq
+
+    from ic_spark.compaction.evolution import local_parquet_files
+
+    for t in tasks:
+        need = [k for k in keys if k not in (t.partition_values or {})]
+        for f in local_parquet_files([t.data_file_path]):
+            have = {n.lower() for n in pq.read_schema(f).names}
+            missing = [k for k in need if k.lower() not in have]
+            if missing:
+                raise ValueError(
+                    f"equality-delete file {f} lacks key column(s) {missing}"
+                )
 
 
 def build_merge_on_read(
@@ -823,21 +842,29 @@ def build_merge_on_read(
         # field-id projection resolves it to the current name.
         for group in split_equality_delete_groups(request.equality_delete_files):
             eq_cols = list(group.equality_ids)
-            # name_mapping-only rename tracking (no schema_history /
-            # write_schema_id on the delete task): a delete file
-            # written BEFORE a key rename stores the key under its OLD
-            # footer name, and the plain columns= read would fail at
-            # plan time on the current name.  Route through the
-            # enforced-schema + evolved-projection path, which
-            # coalesces the current name with its historical names
-            # (r9 review find).
+            # Parquet delete files read under the table schema's key
+            # fields: no inference job, and the footers are validated
+            # like data files (a narrowed key type fails at plan time
+            # instead of being cast in the join).  name_mapping-only
+            # rename tracking (no schema_history / write_schema_id on
+            # the delete task): a delete file written BEFORE a key
+            # rename stores the key under its OLD footer name, and the
+            # enforced-schema + evolved-projection path coalesces the
+            # current name with its historical names (r9 review find).
+            # schema_history alone keeps its field-id projection.
             eq_schema = None
-            if request.name_mapping:
-                by_name = {f.name: f for f in request.schema.fields}
-                if all(c in by_name for c in eq_cols):
-                    from pyspark.sql.types import StructType as _ST
+            by_name = {f.name: f for f in request.schema.fields}
+            parquet = all(
+                (t.file_format or "parquet") == "parquet" for t in group.tasks
+            )
+            if all(c in by_name for c in eq_cols) and (
+                request.name_mapping or (parquet and not request.schema_history)
+            ):
+                from pyspark.sql.types import StructType as _ST
 
-                    eq_schema = _ST([by_name[c] for c in eq_cols])
+                if not request.name_mapping:
+                    _require_key_columns(group.tasks, eq_cols)
+                eq_schema = _ST([by_name[c] for c in eq_cols])
             eq_del = _scan_with_hidden_cols(
                 spark,
                 list(group.tasks),
@@ -907,19 +934,10 @@ def lineage_scan_schema(schema):
     )
 
 
-# Above this many files, attach_lineage builds its broadcast map via
-# one Arrow batch (pandas) instead of Py4J row-at-a-time serialization:
-# a million-file map must not pickle a million tuples through the
-# gateway just because a caller took the default (the same auto-routing
-# rule as DV_DISTRIBUTED_FILE_THRESHOLD).
-LINEAGE_ARROW_FILE_THRESHOLD = 4096
-
-
 def attach_lineage(
     spark: SparkSession,
     df: DataFrame,
     lineage: dict,
-    arrow_threshold: int | None = None,
 ) -> DataFrame:
     """Resolve the Iceberg v3 lineage columns on a hidden-col scan:
     ``_row_id`` = file first_row_id + position (or the file's
@@ -938,43 +956,25 @@ def attach_lineage(
     broadcast hash equi-join on an unmodified column.  (The map itself
     is inherently driver-sized: it is built from the already-planned
     scan tasks, exactly like the reference's driver-side scan
-    planning; above :data:`LINEAGE_ARROW_FILE_THRESHOLD` files it
-    ships as one Arrow batch instead of Py4J-pickled tuples.)"""
+    planning, and ships as one Arrow batch: :func:`_file_map_df`.)"""
     from ic_spark.compaction.request import LAST_UPDATED_SEQ_COL, ROW_ID_COL
 
-    if arrow_threshold is None:
-        arrow_threshold = LINEAGE_ARROW_FILE_THRESHOLD
-    paths: list[str] = []
-    frids: list[int | None] = []
+    rows: list[tuple] = []
     seen: dict[str, str] = {}
     for p, frid in lineage.items():
         for v in _scan_path_variants(p):
             other = seen.get(v)
             if other is None:
                 seen[v] = p
-                paths.append(v)
-                frids.append(frid)
+                rows.append((v, frid))
             elif other != p:
                 raise ValueError(
                     f"ambiguous scan path spelling {v!r}: "
                     f"{other!r} vs {p!r}"
                 )
-    if len(lineage) > arrow_threshold:
-        import pandas as pd
-
-        lin_df = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "__lin_path": pd.Series(paths, dtype="string"),
-                    "__first_row_id": pd.array(frids, dtype="Int64"),
-                }
-            ),
-            schema="__lin_path string, __first_row_id long",
-        )
-    else:
-        lin_df = spark.createDataFrame(
-            list(zip(paths, frids)), "__lin_path string, __first_row_id long"
-        )
+    lin_df = _file_map_df(
+        spark, {"__lin_path": "string", "__first_row_id": "long"}, rows
+    )
     out = df.join(
         F.broadcast(lin_df),
         F.col(SYS_HIDDEN_FILE_PATH) == F.col("__lin_path"),

@@ -1024,3 +1024,163 @@ def test_name_mapping_proto_roundtrip(spark):
     wire = request_to_proto(req)
     back = request_from_proto(wire)
     assert back.name_mapping == {"name": ["title", "old,comma"]}
+
+
+def _plan_cost_request(spark, base):
+    """Two identity-partitioned data files whose pages omit ``g``,
+    position deletes in both column flavors (spec ``file_path``/``pos``
+    recorded under the manifest spelling, legacy ``sys_hidden_*`` under
+    the scan spelling), and two equality-delete groups.  Returns the
+    request and its expected (id, name, g) rows."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    a = write_parquet(
+        spark,
+        str(base / "g=a"),
+        [(i, f"n{i}") for i in range(10)],
+        "id long, name string",
+    )
+    b = write_parquet(
+        spark,
+        str(base / "g=b"),
+        [(i, f"n{i}") for i in range(10, 20)],
+        "id long, name string",
+    )
+    pos_spec = write_parquet(
+        spark,
+        str(base / "pos_spec"),
+        [(a, 0), (a, 1)],
+        "file_path string, pos long",
+    )
+    pos_legacy = write_parquet(
+        spark,
+        str(base / "pos_legacy"),
+        [(spark_uri(b), 3)],
+        "sys_hidden_file_path string, sys_hidden_pos long",
+    )
+    eq_id = write_parquet(spark, str(base / "eq_id"), [(5,), (15,)], "id long")
+    eq_id_name = write_parquet(
+        spark,
+        str(base / "eq_id_name"),
+        [(12, "n12"), (7, "nope")],
+        "id long, name string",
+    )
+    schema = StructType(
+        [
+            StructField("id", LongType()),
+            StructField("name", StringType()),
+            StructField("g", StringType()),
+        ]
+    )
+    req = RewriteFilesRequest(
+        schema=schema,
+        data_files=[
+            FileScanTask(a, sequence_number=1, partition_values={"g": "a"}),
+            FileScanTask(b, sequence_number=2, partition_values={"g": "b"}),
+        ],
+        position_delete_files=[
+            FileScanTask(pos_spec, 3, FileContent.POSITION_DELETES),
+            FileScanTask(pos_legacy, 3, FileContent.POSITION_DELETES),
+        ],
+        equality_delete_files=[
+            FileScanTask(eq_id, 3, FileContent.EQUALITY_DELETES, ("id",)),
+            FileScanTask(
+                eq_id_name, 4, FileContent.EQUALITY_DELETES, ("id", "name")
+            ),
+        ],
+    )
+    want = [(i, f"n{i}", "a") for i in (2, 3, 4, 6, 7, 8, 9)] + [
+        (i, f"n{i}", "b") for i in (10, 11, 14, 16, 17, 18, 19)
+    ]
+    return req, want
+
+
+def test_mor_plan_build_runs_no_job_and_no_python_rdd(spark, tmp_path, monkeypatch):
+    """Plan cost pin: building the MoR frame runs no Spark job (every
+    delete scan reads under a known schema — nothing is inferred), and
+    each driver-built file map (path spellings, partition values) ships
+    as an Arrow batch, not a pickled Python RDD whose broadcast would
+    start Python workers."""
+    req, want = _plan_cost_request(spark, tmp_path)
+    maps = []
+    create = spark.createDataFrame
+
+    def spy(*args, **kwargs):
+        df = create(*args, **kwargs)
+        maps.append(df)
+        return df
+
+    monkeypatch.setattr(spark, "createDataFrame", spy)
+    dag = spark._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    out = build_merge_on_read(spark, req)
+    assert dag.nextJobId() - before == 0
+    monkeypatch.undo()
+    assert len(maps) == 2  # path-spelling map + partition-value map
+    for m in maps:
+        assert "PythonRDD" not in m._jdf.rdd().toDebugString()
+    assert sorted(map(tuple, out.collect())) == sorted(want)
+
+
+def test_mor_maps_without_arrow_match(spark, tmp_path):
+    """Spark's non-Arrow fallback for the driver-built file maps
+    returns the same rows as the Arrow route (position deletes under
+    both path spellings, partition fill, equality deletes)."""
+    req, want = _plan_cost_request(spark, tmp_path)
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    with_arrow = sorted(map(tuple, build_merge_on_read(spark, req).collect()))
+    spark.conf.set(key, "false")
+    try:
+        without = sorted(map(tuple, build_merge_on_read(spark, req).collect()))
+    finally:
+        spark.conf.set(key, prev)
+    assert with_arrow == without == sorted(want)
+
+
+def test_equality_delete_scan_enforces_table_key_types(spark, tmp_path):
+    """Equality-delete files read under the table schema's key fields:
+    a file storing a ``bigint`` key as int32 still deletes (widening
+    read), while a file whose key type is wider than the table's fails
+    at plan time — it is not silently cast in the join — and so does a
+    file that lacks the key column (it would read as NULL and delete
+    nothing)."""
+    from pyspark.sql.types import (
+        IntegerType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    def request(tag, key_type, data_ddl, eq_ddl):
+        data = write_parquet(
+            spark,
+            str(tmp_path / f"data_{tag}"),
+            [(i, f"n{i}") for i in range(6)],
+            data_ddl,
+        )
+        eq = write_parquet(
+            spark,
+            str(tmp_path / f"eq_{tag}"),
+            [(2,), (4,)],
+            eq_ddl,
+        )
+        return RewriteFilesRequest(
+            schema=StructType(
+                [StructField("id", key_type), StructField("name", StringType())]
+            ),
+            data_files=[FileScanTask(data, sequence_number=1)],
+            equality_delete_files=[
+                FileScanTask(eq, 2, FileContent.EQUALITY_DELETES, ("id",))
+            ],
+        )
+
+    widened = request("widened", LongType(), "id long, name string", "id int")
+    assert collected_ids(build_merge_on_read(spark, widened)) == [0, 1, 3, 5]
+    narrowed = request("narrowed", IntegerType(), "id int, name string", "id long")
+    with pytest.raises(ValueError, match="schema evolution:"):
+        build_merge_on_read(spark, narrowed)
+    keyless = request("keyless", LongType(), "id long, name string", "key long")
+    with pytest.raises(ValueError, match="lacks key column"):
+        build_merge_on_read(spark, keyless)

@@ -374,9 +374,9 @@ def test_changelog_with_lineage(spark, tmp_path):
 
 @pytest.mark.slow
 def test_attach_lineage_routes_pinned_equal(spark, tmp_path):
-    """The Arrow-batch map route (forced with arrow_threshold=0)
-    returns EXACTLY the literal route's rows, and neither plan
-    evaluates a per-row regexp — path normalization lives on the
+    """The one map route (a single Arrow batch) resolves every row's
+    ``_row_id``, and the plan evaluates no per-row regexp — path
+    normalization lives on the
     broadcast map side, so the join is a plain broadcast hash
     equi-join on the unmodified hidden path column."""
     from ic_spark.compaction.planner import (
@@ -393,15 +393,10 @@ def test_attach_lineage_routes_pinned_equal(spark, tmp_path):
     )
     lin = {d.data_file_path: d.first_row_id for d in data}
     a = attach_lineage(spark, base, lin)
-    b = attach_lineage(spark, base, lin, arrow_threshold=0)
-    rows_a = sorted(map(tuple, a.collect()), key=repr)
-    rows_b = sorted(map(tuple, b.collect()), key=repr)
-    assert rows_a == rows_b
     assert {r._row_id for r in a.collect()} == set(range(16))
-    for d in (a, b):
-        plan = d._jdf.queryExecution().executedPlan().toString()
-        assert "regexp" not in plan.lower()
-        assert "BroadcastHashJoin" in plan
+    plan = a._jdf.queryExecution().executedPlan().toString()
+    assert "regexp" not in plan.lower()
+    assert "BroadcastHashJoin" in plan
 
 
 @pytest.mark.slow
